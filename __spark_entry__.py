@@ -299,7 +299,7 @@ def q_mvt_polygon_counts(spark, sf_dir):
     per-(z, x, y, layer) kept/dropped counts of the nations/regions
     rect layers from the REAL hierarchical build — the fused anchor
     kernel derives deep-tile polygon membership from the broadcast
-    layer frame (pipeline.py:1220-1270) and every candidate runs
+    layer frame (pipeline._encode_anchor_bucket) and every candidate runs
     reproject -> prepare (quantize/dedup/de-close/rectify,
     prepare.go:114-150) -> CleanGeometry's always-on make-valid sweep
     (validate.go:101-146). DuckDB replays the keep-decision from first

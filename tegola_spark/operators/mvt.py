@@ -701,18 +701,17 @@ _VECTORIZE_POINT_BLOCK = _auto_vector_emit()
 # (re-measured round 6: hot-tile encode 3.5s -> ~1.4s, stage wall bound
 # by the tail). SPARK_GRAFT_VECTOR_EMIT=0 still forces scalar
 # everywhere (the differential tests rely on it).
-_VECTOR_EMIT_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_VECTOR_EMIT_MIN",
-                                           "8192"))
+_VECTOR_EMIT_BIG_GROUP = 8192
 _VECTOR_EMIT_FORCED_OFF = os.environ.get("SPARK_GRAFT_VECTOR_EMIT") == "0"
 
 
 def vector_emit(n: int) -> bool:
-    """Per-group emission-strategy decision (see _VECTOR_EMIT_MIN_ROWS)."""
+    """Per-group emission-strategy decision (see _VECTOR_EMIT_BIG_GROUP)."""
     if _VECTORIZE_POINT_BLOCK:
         return True
     if _VECTOR_EMIT_FORCED_OFF:
         return False
-    return n >= _VECTOR_EMIT_MIN_ROWS
+    return n >= _VECTOR_EMIT_BIG_GROUP
 
 
 def encode_point_layer_arrays(name: str, fids: np.ndarray, zz: np.ndarray,

@@ -174,24 +174,59 @@ def test_feature_cap_auto_default_no_effect_at_test_scale(spark, sf_dir):
     assert row["n_dropped"] == 0
 
 
+def _tile_bytes(tiles) -> dict:
+    return {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
+            for r in tiles.collect()}
+
+
+def _lineage(metrics) -> dict:
+    return {(r["z"], r["x"], r["y"], r["layer"]):
+            (r["n_features"], r["n_dropped"]) for r in metrics.collect()}
+
+
+def _tiles_and_lineage(built) -> tuple[dict, dict]:
+    """Tile bytes and per-(tile, layer) lineage of one build, with the
+    metrics cached so a tile assembly over them does not build again."""
+    metrics, tiles = built
+    metrics.cache()
+    try:
+        lineage = _lineage(metrics)
+        return _tile_bytes(tiles), lineage
+    finally:
+        metrics.unpersist()
+
+
+def _fused_anchor(tiles) -> bool:
+    """Whether the plan's anchor kernel assembles tiles in place (its
+    grouped-map output carries tile_len)."""
+    plan = tiles._jdf.queryExecution().executedPlan().toString()
+    return any("FlatMapGroupsInPandas" in line and "tile_len" in line
+               for line in plan.splitlines())
+
+
 def test_hierarchical_build_byte_identical(spark, sf_dir):
     """build_tiles_hierarchical (one anchor shuffle for deep point
-    zooms) must produce byte-identical tiles to the per-zoom fan-out —
-    in BOTH assembly modes (auto picks unfused at this shallow depth;
-    fused=True forces the in-kernel assembly path)."""
+    zooms) must produce byte-identical tiles and per-(tile, layer)
+    lineage to the per-zoom fan-out — under both anchor kernels (the
+    default anchor 4 is 1 level below z5, so unfused; anchor 2 is 3
+    levels below, so fused in-kernel assembly) and both with the
+    default budgets and a tiny cap that forces drops everywhere."""
     zooms = [0, 1, 2, 3, 4, 5]
-    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in std.collect()}
-    for fused in (None, True):
-        _, hier = pipeline.build_tiles_hierarchical(
-            spark, sf_dir, zooms=zooms, fused=fused)
-        b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in hier.collect()}
-        assert set(a) == set(b), f"fused={fused}"
-        diff = [k for k in a if a[k] != b[k]]
-        assert diff == [], \
-            f"fused={fused}: {len(diff)} tiles differ, e.g. {diff[:5]}"
+    for cap in ("auto", 7):
+        a, da = _tiles_and_lineage(pipeline.build_tiles(
+            spark, sf_dir, zooms=zooms, max_features_per_tile=cap))
+        for anchor_z in (None, 2):
+            hier = pipeline.build_tiles_hierarchical(
+                spark, sf_dir, zooms=zooms, anchor_z=anchor_z,
+                max_features_per_tile=cap)
+            b, db = _tiles_and_lineage(hier)
+            what = f"cap={cap} anchor_z={anchor_z}"
+            assert _fused_anchor(hier[1]) == (anchor_z == 2), what
+            assert set(a) == set(b), what
+            diff = [k for k in a if a[k] != b[k]]
+            assert diff == [], \
+                f"{what}: {len(diff)} tiles differ, e.g. {diff[:5]}"
+            assert db == da, what
 
 
 def test_hierarchical_cap_enforced(spark, sf_dir):
@@ -229,148 +264,41 @@ def test_fused_guard_falls_back(spark, sf_dir, monkeypatch):
     budget, so the unfused path runs — and still produce byte-identical
     tiles."""
     zooms = [0, 1, 2, 3, 4]
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_MAX_POLYS", "3")
-    assert pipeline.fused_max_polys() == 3
+    monkeypatch.setattr(pipeline, "FUSED_MAX_POLYS", 3)
     _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms)
     # anchor_z=1 makes the deep span 3 levels -> auto decision WANTS
     # fused; the guard must veto it
     _, hier = pipeline.build_tiles_hierarchical(
         spark, sf_dir, zooms=zooms, anchor_z=1)
+    assert not _fused_anchor(hier)
     a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in std.collect()}
     b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in hier.collect()}
     assert set(a) == set(b)
     assert all(a[k] == b[k] for k in a)
 
 
-def test_url_dict_transport_off_byte_identical(spark, sf_dir, monkeypatch):
-    """The URL-prefix dictionary transport is a pure encoding of the
-    anchor exchange: toggling it must not change a byte of any tile.
-    (Default is volume-adaptive since the round-5 cost audit — on at
-    >= URL_DICT_MIN_ROWS corpus rows; both legs are forced here.)"""
-    zooms = [2, 3, 4]
-    monkeypatch.setenv("SPARK_GRAFT_URL_DICT", "1")
-    _, on = pipeline.build_tiles_hierarchical(spark, sf_dir, zooms=zooms,
-                                              anchor_z=2)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in on.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_URL_DICT", "0")
-    _, off = pipeline.build_tiles_hierarchical(spark, sf_dir, zooms=zooms,
-                                               anchor_z=2)
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in off.collect()}
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
-
-
-def test_url_dict_volume_gate(spark, sf_dir, monkeypatch):
-    """Unforced, the dictionary engages only at volume: below
-    URL_DICT_MIN_ROWS the points pass through untouched (no extra
-    distinct+collect job), above it tag_url is replaced by the
-    (_upid, _usfx) pair."""
-    monkeypatch.delenv("SPARK_GRAFT_URL_DICT", raising=False)
-    pts = pipeline.point_features(spark, sf_dir)
-    small, bc = pipeline._dict_encode_url(spark, pts, n_pts=10)
-    assert bc is None and "tag_url" in small.columns
-    none_given, bc = pipeline._dict_encode_url(spark, pts, n_pts=None)
-    assert bc is None and "tag_url" in none_given.columns
-    big, bc = pipeline._dict_encode_url(
-        spark, pts, n_pts=pipeline.URL_DICT_MIN_ROWS)
-    assert bc is not None
-    assert "_upid" in big.columns and "tag_url" not in big.columns
-
-
-def test_stream_encode_matches_legacy(spark, sf_dir, monkeypatch):
-    """Round-5 single-exchange streaming encode (repartition -> sorted
-    mapInPandas cap+encode, with the cap-first threshold broadcast)
-    must be byte-identical to the legacy window-cap + bucket plan —
-    both with the default budgets and with a tiny cap that forces
-    drops on every path (cap-first filter, stream cap, window cap).
-    The volume-adaptive default picks legacy at this scale, so the new
-    path is forced via env."""
-    zooms = [0, 1, 2, 3]
-    for cap in ("auto", 7):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_ENCODE", "1")
-        _, new = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
-                                      max_features_per_tile=cap)
-        nm, _ = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
-                                     max_features_per_tile=cap)
-        a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in new.collect()}
-        da = {(r["z"], r["x"], r["y"], r["layer"]):
-              (r["n_features"], r["n_dropped"]) for r in nm.collect()}
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_ENCODE", "0")
-        om, old = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
-                                       max_features_per_tile=cap)
-        b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in old.collect()}
-        db = {(r["z"], r["x"], r["y"], r["layer"]):
-              (r["n_features"], r["n_dropped"]) for r in om.collect()}
-        monkeypatch.delenv("SPARK_GRAFT_STREAM_ENCODE")
-        assert set(a) == set(b), f"cap={cap}"
-        assert all(a[k] == b[k] for k in a), f"cap={cap}"
-        assert da == db, f"cap={cap}"
-
-
-def test_fused_low_zoom_assembly_byte_identical(spark, sf_dir, monkeypatch):
-    """Round-5 follow-on: the fused LOW-zoom path (cap-first winners +
-    skeleton keys -> one (z,x,y) exchange -> in-kernel pages + polygon
-    encode + assembly) must be byte-identical to the standard
-    window/assemble plan — tiles AND per-layer lineage — with the
-    default budgets and with a tiny cap forcing drops, under cap-first
-    both on and off."""
-    zooms = [0, 1, 2, 3, 4, 5]
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_ASSEMBLY", "1")
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_LOW", "1")
-    for cap, cf in (("auto", None), (7, "1"), (7, "0")):
-        if cf is not None:
-            monkeypatch.setenv("SPARK_GRAFT_CAP_FIRST", cf)
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_CAP_FIRST", raising=False)
-        sm, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
-                                       max_features_per_tile=cap)
-        a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in std.collect()}
-        da = {(r["z"], r["x"], r["y"], r["layer"]):
-              (r["n_features"], r["n_dropped"]) for r in sm.collect()}
-        fm, hier = pipeline.build_tiles_hierarchical(
-            spark, sf_dir, zooms=zooms, anchor_z=4,
-            max_features_per_tile=cap)
-        b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-             for r in hier.collect()}
-        db = {(r["z"], r["x"], r["y"], r["layer"]):
-              (r["n_features"], r["n_dropped"]) for r in fm.collect()}
-        assert set(a) == set(b), f"cap={cap} cf={cf}"
-        diff = [k for k in a if a[k] != b[k]]
-        assert diff == [], \
-            f"cap={cap} cf={cf}: {len(diff)} tiles differ, e.g. {diff[:5]}"
-        assert da == db, f"cap={cap} cf={cf}"
-
-
-def test_fused_low_polygon_only_tiles(spark, sf_dir, monkeypatch):
-    """Skeleton keys: low-zoom tiles covered ONLY by polygon layers
+def test_fused_low_polygon_only_tiles(spark, sf_dir):
+    """Skeleton anchor keys: deep tiles covered ONLY by polygon layers
     (no pages in range — forced by a 5-doc corpus) must still be
-    produced by the fused low-zoom kernel, byte-identical to the
-    standard path."""
+    produced by the fused anchor kernel (anchor 2 under z5 is 3 levels
+    deep, so fused), byte-identical to the standard path."""
     from tegola_spark.sources import corpus
     docs = corpus.documents(spark, sf_dir).where("doc_id < 5")
-    zooms = [0, 1, 2, 3, 4]
+    zooms = [0, 1, 2, 3, 4, 5]
     _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms, docs=docs)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in std.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_ASSEMBLY", "1")
-    monkeypatch.setenv("SPARK_GRAFT_FUSED_LOW", "1")
     fm, hier = pipeline.build_tiles_hierarchical(
-        spark, sf_dir, zooms=zooms, anchor_z=4, docs=docs)
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"])
-         for r in hier.collect()}
+        spark, sf_dir, zooms=zooms, anchor_z=2, docs=docs)
+    assert _fused_anchor(hier)
+    a, b = _tile_bytes(std), _tile_bytes(hier)
     assert set(a) == set(b)
     assert all(a[k] == b[k] for k in a)
-    # the skeleton path actually ran: some low-zoom tile has polygon
-    # layers but no pages layer
-    low = fm.where("z < 4").collect()
+    # the skeleton path actually ran: some deep tile has polygon layers
+    # but no pages layer
     by_tile = {}
-    for r in low:
+    for r in fm.where("z >= 2").collect():
         by_tile.setdefault((r["z"], r["x"], r["y"]), set()).add(r["layer"])
     assert any("pages" not in ls for ls in by_tile.values()), \
-        "expected at least one polygon-only low-zoom tile"
+        "expected at least one polygon-only deep tile"
 
 
 def test_typed_tag_values_bytematch_hand_built_protobuf():

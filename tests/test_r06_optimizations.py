@@ -106,14 +106,14 @@ def test_vector_emit_size_gate():
     prev = mvt._VECTORIZE_POINT_BLOCK
     mvt._VECTORIZE_POINT_BLOCK = False
     try:
-        assert not mvt.vector_emit(mvt._VECTOR_EMIT_MIN_ROWS - 1)
-        assert mvt.vector_emit(mvt._VECTOR_EMIT_MIN_ROWS)
+        assert not mvt.vector_emit(mvt._VECTOR_EMIT_BIG_GROUP - 1)
+        assert mvt.vector_emit(mvt._VECTOR_EMIT_BIG_GROUP)
     finally:
         mvt._VECTORIZE_POINT_BLOCK = prev
 
 
 def test_vector_emit_big_group_byte_identical():
-    n = mvt._VECTOR_EMIT_MIN_ROWS + 100
+    n = mvt._VECTOR_EMIT_BIG_GROUP + 100
     rng = np.random.default_rng(7)
     lon = rng.uniform(-170, 170, n)
     lat = rng.uniform(-80, 80, n)

@@ -54,7 +54,7 @@ def main():
     t0 = time.perf_counter()
     out2 = pipeline._encode_anchor_bucket(
         apdf.copy(), 4, [4, 5], False, True, caps=caps, polys=None,
-        layer_zoom=None, emit_tiles=False, url_prefixes=None)
+        layer_zoom=None, emit_tiles=False)
     t1 = time.perf_counter()
     print(f"anchor encode ({len(out2)} rows): {t1-t0:.2f}s", file=sys.stderr)
 
@@ -62,7 +62,7 @@ def main():
     prof.enable()
     pipeline._encode_anchor_bucket(
         apdf.copy(), 4, [4, 5], False, True, caps=caps, polys=None,
-        layer_zoom=None, emit_tiles=False, url_prefixes=None)
+        layer_zoom=None, emit_tiles=False)
     prof.disable()
     st = pstats.Stats(prof)
     st.sort_stats("cumulative").print_stats(30)

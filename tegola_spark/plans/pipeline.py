@@ -219,57 +219,68 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
     if "srid" not in pdf.columns:
         pdf = pdf.assign(srid=4326)
 
-    # split: SoA points (lon/lat columns, geom NULL) take the zero-copy
-    # fast path; legacy 21-byte WKB points (debug centers, direct
-    # encode_bucket callers) take the frombuffer fast path; everything
-    # else is the generic per-feature path. The per-row WKB sniff only
-    # runs when the group is not pure-SoA (the corpus groups are).
+    # SoA points travel as lon/lat columns with geom NULL
     if "lon" in pdf.columns:
         soa = pdf["lon"].notna().to_numpy()
     else:
         soa = np.zeros(len(pdf), dtype=bool)
+    tag_cols = _string_tag_cols(pdf) if len(pdf) and soa.all() else None
 
-    # full-bypass for pure-SoA point groups (the corpus case): project,
-    # clip, zigzag and emit the ENTIRE layer from column arrays —
-    # no per-feature dicts anywhere (mvt.encode_point_layer_arrays;
-    # byte-identical to the dict path by differential test). Gated on
-    # the emission-strategy switch (mvt._VECTORIZE_POINT_BLOCK — see
-    # the crossover measurement there); falls back when any tag column
-    # holds non-string values (e.g. numeric default_tags) — the
-    # factorize dictionary can't reproduce type-sensitive value
-    # identity then.
-    if mvt.vector_emit(len(pdf)) and soa.all() and len(pdf):
-        tag_cols = []
-        strings_only = True
-        for c in pdf.columns:
-            if not c.startswith("tag_"):
-                continue
-            arr = pdf[c].to_numpy()
-            m = pd.notna(arr)
-            if m.any() and not all(type(v) is str for v in arr[m].tolist()):
-                strings_only = False
-                break
-            tag_cols.append((c[4:], arr))
-        if strings_only:
-            keep, zz = _project_points(
-                pdf["lon"].to_numpy(dtype=np.float64),
-                pdf["lat"].to_numpy(dtype=np.float64),
-                ext, clip_region, (pdf["srid"] != 3857).to_numpy())
-            fids = pdf["feature_id"].to_numpy(dtype=np.int64)[keep]
-            body = mvt.encode_point_layer_arrays(
-                layer, fids, zz[keep],
-                [(k, a[keep]) for k, a in tag_cols])
-            blob = mvt.encode_tile([body])
-            cap_dropped = int(pdf["_cap_dropped"].iloc[0]) \
-                if "_cap_dropped" in pdf.columns and len(pdf) else 0
-            n_feats = int(keep.sum())
-            return {
-                "z": z, "x": x, "y": y, "layer": layer,
-                "layer_bytes": blob, "n_features": n_feats,
-                "n_dropped": n_in - n_feats + cap_dropped,
-                "bytes": len(blob),
-                "encode_ms": (time.perf_counter() - t0) * 1000.0,
-            }
+    if tag_cols is not None:
+        # pure-SoA point group with string-only tags (the corpus case):
+        # project, clip, zigzag and emit the whole layer from column
+        # arrays, no per-feature dicts (byte-identical to encode_layer
+        # by differential test)
+        keep, zz = _project_points(
+            pdf["lon"].to_numpy(dtype=np.float64),
+            pdf["lat"].to_numpy(dtype=np.float64),
+            ext, clip_region, (pdf["srid"] != 3857).to_numpy())
+        body = mvt.encode_point_layer_arrays(
+            layer, pdf["feature_id"].to_numpy(dtype=np.int64)[keep],
+            zz[keep], [(k, a[keep]) for k, a in tag_cols])
+        n_feats = int(keep.sum())
+    else:
+        feats, n_split = _feature_dicts(pdf, soa, z, ext, clip_region,
+                                        simplify, repair)
+        n_in += n_split
+        body = mvt.encode_layer(layer, feats)
+        n_feats = len(feats)
+    blob = mvt.encode_tile([body])  # wrap as field-3 record
+    # rows removed by the pre-shuffle feature cap (build_tiles) carry
+    # their count on every surviving row of the group
+    cap_dropped = int(pdf["_cap_dropped"].iloc[0]) \
+        if "_cap_dropped" in pdf.columns and len(pdf) else 0
+    return {
+        "z": z, "x": x, "y": y, "layer": layer, "layer_bytes": blob,
+        "n_features": n_feats, "n_dropped": n_in - n_feats + cap_dropped,
+        "bytes": len(blob), "encode_ms": (time.perf_counter() - t0) * 1000.0,
+    }
+
+
+def _string_tag_cols(pdf: pd.DataFrame):
+    """[(key, values)] for every tag_* column, or None when a tag holds
+    a non-string value (e.g. a numeric default_tag): the array
+    emitter's factorize dictionary can't reproduce type-sensitive value
+    identity, so such groups go through encode_layer."""
+    cols = []
+    for c in pdf.columns:
+        if not c.startswith("tag_"):
+            continue
+        arr = pdf[c].to_numpy()
+        if not all(type(v) is str for v in arr[pd.notna(arr)].tolist()):
+            return None
+        cols.append((c[4:], arr))
+    return cols
+
+
+def _feature_dicts(pdf: pd.DataFrame, soa: np.ndarray, z: int, ext,
+                   clip_region, simplify: bool, repair: bool):
+    """Every other group: per-feature dicts for mvt.encode_layer, sorted
+    by id. SoA points and legacy 21-byte WKB points (debug centers,
+    direct encode_bucket callers) take the vectorized projection; the
+    rest is decoded and run through the per-feature geometry chain.
+    Returns (features, extra input rows from collection flattening)."""
+    n_split = 0
     if (soa.all() and len(pdf)) or "geom" not in pdf.columns:
         wkbpt = np.zeros(len(pdf), dtype=bool)
     else:
@@ -280,7 +291,7 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
             dtype=bool, count=len(pdf))
     feats = []
     if soa.all() and len(pdf):
-        pts = pdf  # pure-SoA group (the corpus case): no mask copy
+        pts = pdf  # pure-SoA group: no mask copy
     else:
         pts = pdf[soa]
     if len(pts):
@@ -332,7 +343,7 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
         # non-empty -> one feature per member geometry, tags shared
         # (mvt.NewFeatures flattening, mvt/feature.go:48-67)
         members = wkb.flatten_collection(decoded)
-        n_in += max(0, len(members) - 1)  # empty collection counts as 1 drop
+        n_split += max(0, len(members) - 1)  # empty collection counts as 1 drop
         for g in members:
             if srid != 3857:
                 # P8 ellipsoidal feature reprojection (atlas/map.go:241-248);
@@ -356,18 +367,7 @@ def _encode_one(pdf: pd.DataFrame, t0: float, z: int, x: int, y: int,
 
     # O1 determinism across both paths
     feats.sort(key=lambda f: f["id"])
-    body = mvt.encode_layer(layer, feats)
-    blob = mvt.encode_tile([body])  # wrap as field-3 record
-    ms = (time.perf_counter() - t0) * 1000.0
-    # rows removed by the pre-shuffle feature cap (build_tiles) carry
-    # their count on every surviving row of the group
-    cap_dropped = int(pdf["_cap_dropped"].iloc[0]) \
-        if "_cap_dropped" in pdf.columns and len(pdf) else 0
-    return {
-        "z": z, "x": x, "y": y, "layer": layer, "layer_bytes": blob,
-        "n_features": len(feats), "n_dropped": n_in - len(feats) + cap_dropped,
-        "bytes": len(blob), "encode_ms": ms,
-    }
+    return feats, n_split
 
 
 def point_features(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:

@@ -112,21 +112,44 @@ def _unescape(s: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.BinaryType())
-def _render_html(text: pd.Series, url: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-    # repr() is the shortest float round-trip representation — the
-    # geocoder re-parses these EXACT doubles back out.
-    lat_s = lat.map(repr)
-    lon_s = lon.map(repr)
-    body = _escape(text.fillna(""))
-    html = (
+def _page(text: pd.Series, url: pd.Series, lat: pd.Series,
+          lon: pd.Series) -> pd.Series:
+    """The page template: escaped text plus a geo meta tag. repr() is
+    the shortest float round-trip representation — the geocoder
+    re-parses these EXACT doubles back out."""
+    return (
         '<html><head><meta name="geo.position" content="'
-        + lat_s + ";" + lon_s
+        + lat.map(repr) + ";" + lon.map(repr)
         + '"/><meta charset="utf-8"/><title>' + url
-        + "</title></head><body><article><p>" + body
+        + "</title></head><body><article><p>" + _escape(text.fillna(""))
         + "</p></article></body></html>"
     )
-    return html.map(lambda s: s.encode("utf-8"))
+
+
+# the geocoder: the (lat, lon) doubles of the page's geo meta tag
+_GEO_LAT_RE = r'geo\.position" content="([^;]+);'
+_GEO_LON_RE = r'geo\.position" content="[^;]+;([^"]+)"'
+
+
+def _parse_coord(page: pd.Series, pattern: str) -> pd.Series:
+    return page.str.extract(pattern, expand=False).astype(float)
+
+
+def _decode(html: pd.Series) -> pd.Series:
+    return html.map(lambda b: b.decode("utf-8") if b is not None else "")
+
+
+def _url_col():
+    """The page url, derived from the document row."""
+    return F.concat(
+        F.lit("https://"), F.col("source"), F.lit(".example.com/"),
+        F.col("lang"), F.lit("/"), F.col("doc_id").cast("string"),
+    ).alias("url")
+
+
+@F.pandas_udf(T.BinaryType())
+def _render_html(text: pd.Series, url: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
+    return _page(text, url, lat, lon).map(lambda s: s.encode("utf-8"))
 
 
 @F.pandas_udf(T.StringType())
@@ -136,21 +159,18 @@ def extract_text(html: pd.Series) -> pd.Series:
     Per-row invariant (BASELINE.json input_hint): byte-identical to the
     `text` column per url — enforced by tests/test_corpus_spark.py.
     """
-    s = html.map(lambda b: b.decode("utf-8") if b is not None else "")
-    inner = s.str.extract(r"(?s)<p>(.*)</p>", expand=False).fillna("")
+    inner = _decode(html).str.extract(r"(?s)<p>(.*)</p>", expand=False).fillna("")
     return _unescape(inner)
 
 
 @F.pandas_udf(T.DoubleType())
 def geocode_lat(html: pd.Series) -> pd.Series:
-    s = html.map(lambda b: b.decode("utf-8") if b is not None else "")
-    return s.str.extract(r'geo\.position" content="([^;]+);', expand=False).astype(float)
+    return _parse_coord(_decode(html), _GEO_LAT_RE)
 
 
 @F.pandas_udf(T.DoubleType())
 def geocode_lon(html: pd.Series) -> pd.Series:
-    s = html.map(lambda b: b.decode("utf-8") if b is not None else "")
-    return s.str.extract(r'geo\.position" content="[^;]+;([^"]+)"', expand=False).astype(float)
+    return _parse_coord(_decode(html), _GEO_LON_RE)
 
 
 def pages(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
@@ -164,10 +184,7 @@ def pages(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> Da
     doc = spread_scan(doc, "doc_id")
     base = doc.select(
         "doc_id",
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example.com/"),
-            F.col("lang"), F.lit("/"), F.col("doc_id").cast("string"),
-        ).alias("url"),
+        _url_col(),
         F.timestamp_seconds(
             F.lit(_TS_BASE) + (F.col("doc_id") % 31536000)
         ).alias("warc_ts"),
@@ -203,21 +220,9 @@ def _render_and_geocode(text: pd.Series, url: pd.Series,
     still come from regex-parsing the rendered page, exactly the
     geocode_lat/geocode_lon expressions), but only (text, url) cross in
     and 16 bytes/row cross out."""
-    lat_s = lat_in.map(repr)
-    lon_s = lon_in.map(repr)
-    body = _escape(text.fillna(""))
-    html = (
-        '<html><head><meta name="geo.position" content="'
-        + lat_s + ";" + lon_s
-        + '"/><meta charset="utf-8"/><title>' + url
-        + "</title></head><body><article><p>" + body
-        + "</p></article></body></html>"
-    )
-    lat = html.str.extract(r'geo\.position" content="([^;]+);',
-                           expand=False).astype(float)
-    lon = html.str.extract(r'geo\.position" content="[^;]+;([^"]+)"',
-                           expand=False).astype(float)
-    return pd.DataFrame({"lat": lat, "lon": lon})
+    page = _page(text, url, lat_in, lon_in)
+    return pd.DataFrame({"lat": _parse_coord(page, _GEO_LAT_RE),
+                         "lon": _parse_coord(page, _GEO_LON_RE)})
 
 
 def geocoded_points(doc: DataFrame) -> DataFrame:
@@ -228,10 +233,7 @@ def geocoded_points(doc: DataFrame) -> DataFrame:
     doc = spread_scan(doc, "doc_id")
     base = doc.select(
         "doc_id",
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example.com/"),
-            F.col("lang"), F.lit("/"), F.col("doc_id").cast("string"),
-        ).alias("url"),
+        _url_col(),
         F.col("lang"),
         F.col("text"),
         col_lat(F.col("doc_id")).alias("_lat"),

@@ -83,3 +83,15 @@ def test_geocode_exact_roundtrip(pages_df, spark, sf_dir):
     mm = j.agg(F.min("lat"), F.max("lat"), F.min("lon"), F.max("lon")).first()
     assert -85.05 < mm[0] and mm[1] < 85.05
     assert -180.0 < mm[2] and mm[3] < 180.0
+
+
+def test_geocoded_points_equals_geocoded_pages(pages_df, spark, sf_dir):
+    """The fused render+geocode kernel yields exactly what the split
+    render -> geocode_lat/geocode_lon path parses from the page."""
+    cols = ["doc_id", "url", "lang", "lat", "lon"]
+    fused = corpus.geocoded_points(corpus.documents(spark, sf_dir))
+    split = corpus.geocoded_pages(pages_df)
+    got = sorted(tuple(r) for r in fused.select(*cols).collect())
+    want = sorted(tuple(r) for r in split.select(*cols).collect())
+    assert len(got) > 0
+    assert got == want

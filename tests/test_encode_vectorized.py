@@ -1,7 +1,7 @@
-"""Vectorized MVT emission (round 3): the block emitters
-(encode_point_features_block / encode_str_values_block) and the
-array-direct layer path (encode_point_layer_arrays) must be
-BYTE-IDENTICAL to the per-feature legacy path for every shape —
+"""Vectorized MVT emission (round 3): the array-direct layer path
+(encode_point_layer_arrays, built on the block emitters
+encode_point_features_block / encode_str_values_block) must be
+BYTE-IDENTICAL to the scalar per-feature encode_layer for every shape —
 protobuf bytes are the product, not an approximation of it."""
 
 import numpy as np
@@ -13,19 +13,7 @@ from tegola_spark.operators import mvt
 from tegola_spark.plans import pipeline
 
 
-@pytest.fixture(autouse=True)
-def vector_emit_on():
-    """The vectorized strategy defaults OFF on this host (32-way
-    bandwidth crossover — see mvt._VECTORIZE_POINT_BLOCK); these tests
-    exercise it explicitly and restore the default."""
-    prev = mvt._VECTORIZE_POINT_BLOCK
-    mvt._VECTORIZE_POINT_BLOCK = True
-    yield
-    mvt._VECTORIZE_POINT_BLOCK = prev
-
-
-def _mk(n, with_tags=True, big_ids=False, skip_some=True, int_tags=False,
-        seed=7):
+def _mk(n, with_tags=True, big_ids=False, skip_some=True, seed=7):
     rng = np.random.default_rng(seed)
     feats = []
     for i in range(n):
@@ -37,40 +25,37 @@ def _mk(n, with_tags=True, big_ids=False, skip_some=True, int_tags=False,
             tags["url"] = f"https://e.com/{'x' * int(rng.integers(0, 60))}/{i}"
             if i % 2:
                 tags["lang"] = "en"
-            if int_tags and i % 5 == 0:
-                tags["w"] = i * 1000003
         fid = int(rng.integers(0, 1 << 62)) if big_ids else i
         feats.append({"id": fid, "tags": tags,
                       "cmds": (cmds, mvt.GEOM_POINT)})
     return feats
 
 
+def _arrays(name, feats):
+    """The same layer through the array emitter: features as columns,
+    tag columns in the dicts' key order."""
+    fids = np.array([f["id"] for f in feats], dtype=np.int64)
+    zz = np.array([f["cmds"][0][1:] for f in feats],
+                  dtype=np.uint32).reshape(-1, 2)
+    cols = [(k, np.array([f["tags"].get(k) for f in feats], dtype=object))
+            for k in ("url", "lang")]
+    return mvt.encode_point_layer_arrays(name, fids, zz, cols)
+
+
 @pytest.mark.parametrize("case", [
     dict(n=1), dict(n=7), dict(n=1000, big_ids=True),
     dict(n=50, with_tags=False), dict(n=0),
-    dict(n=257, skip_some=False), dict(n=100, int_tags=True),
+    dict(n=257, skip_some=False),
 ])
 def test_encode_layer_block_vs_legacy(case):
     feats = _mk(**case)
-    vec = mvt.encode_layer("pages", feats)
-    mvt._VECTORIZE_POINT_BLOCK = False
-    try:
-        leg = mvt.encode_layer("pages", feats)
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = True
-    assert vec == leg
+    assert _arrays("pages", feats) == mvt.encode_layer("pages", feats)
 
 
 def test_encode_layer_unicode_values():
     feats = _mk(40)
     feats[5]["tags"]["url"] = "https://exámple.com/ünïcode/文档"
-    vec = mvt.encode_layer("p", feats)
-    mvt._VECTORIZE_POINT_BLOCK = False
-    try:
-        leg = mvt.encode_layer("p", feats)
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = True
-    assert vec == leg
+    assert _arrays("p", feats) == mvt.encode_layer("p", feats)
 
 
 def test_point_layer_arrays_vs_dict_path():
@@ -101,11 +86,7 @@ def test_point_layer_arrays_vs_dict_path():
     feats = pipeline._vectorized_points(
         pdf, pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), ext, clip,
         srid_mask)
-    mvt._VECTORIZE_POINT_BLOCK = False
-    try:
-        legacy = mvt.encode_layer("pages", feats)
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = True
+    legacy = mvt.encode_layer("pages", feats)
     keep, zz = pipeline._project_points(
         pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64),
         ext, clip, srid_mask)
@@ -134,3 +115,30 @@ def test_bypass_falls_back_on_non_string_tags():
             for k, v in zip(f0["tags"][0::2], f0["tags"][1::2])}
     assert tags["version"] == 7
     assert tags["url"] == "u0"
+
+
+def test_small_point_group_takes_array_emitter(monkeypatch):
+    """A pure lon/lat string-tag group is emitted from its column arrays
+    whatever its size: encode_layer is never called for it."""
+    n = 500
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame({
+        "z": 0, "x": 0, "y": 0,
+        "feature_id": np.arange(n, dtype=np.int64),
+        "lon": rng.uniform(-170, 170, n), "lat": rng.uniform(-80, 80, n),
+        "tag_url": [f"https://a.example.com/{i}" for i in range(n)],
+        "tag_lang": ["en"] * n,
+    })
+    feats = pipeline._vectorized_points(
+        pdf, pdf["lon"].to_numpy(), pdf["lat"].to_numpy(),
+        tuple(float(v) for v in grid.tile_extent_3857(0, 0, 0)),
+        grid.buffered_pixel_bounds(), np.full(n, True))
+    want = mvt.encode_tile([mvt.encode_layer("pages", feats)])
+
+    def _scalar_called(*a, **k):
+        raise AssertionError("scalar encode_layer used for a point group")
+
+    monkeypatch.setattr(mvt, "encode_layer", _scalar_called)
+    out = pipeline.encode_bucket(pdf, const_layer="pages")
+    assert bytes(out["layer_bytes"].iloc[0]) == want
+    assert int(out["n_features"].iloc[0]) == len(feats)

@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tegola_spark.functions import cells
+from tegola_spark.functions import cells, grid
 from tegola_spark.operators import mvt, spatial_join as sj
 from tegola_spark.plans import pipeline
 from tegola_spark.sources import corpus
@@ -98,22 +98,11 @@ def test_cap_still_binds_above_budget(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# size-aware hybrid emitter: big groups take the vectorized path and stay
-# byte-identical to the scalar path
+# array emitter: a big point group's bytes equal the scalar reference
 # ---------------------------------------------------------------------------
 
-def test_vector_emit_size_gate():
-    prev = mvt._VECTORIZE_POINT_BLOCK
-    mvt._VECTORIZE_POINT_BLOCK = False
-    try:
-        assert not mvt.vector_emit(mvt._VECTOR_EMIT_BIG_GROUP - 1)
-        assert mvt.vector_emit(mvt._VECTOR_EMIT_BIG_GROUP)
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = prev
-
-
-def test_vector_emit_big_group_byte_identical():
-    n = mvt._VECTOR_EMIT_BIG_GROUP + 100
+def test_big_point_group_byte_identical():
+    n = 8292
     rng = np.random.default_rng(7)
     lon = rng.uniform(-170, 170, n)
     lat = rng.uniform(-80, 80, n)
@@ -124,20 +113,10 @@ def test_vector_emit_big_group_byte_identical():
         "tag_url": [f"https://a.example.com/{i}" for i in range(n)],
         "tag_lang": ["en"] * n,
     })
-    prev = mvt._VECTORIZE_POINT_BLOCK
-    prev_off = mvt._VECTOR_EMIT_FORCED_OFF
-    try:
-        # hybrid: global switch off, size gate on -> vectorized for this group
-        mvt._VECTORIZE_POINT_BLOCK = False
-        mvt._VECTOR_EMIT_FORCED_OFF = False
-        hybrid = pipeline.encode_bucket(pdf.copy(), const_layer="pages")
-        # forced scalar reference
-        mvt._VECTOR_EMIT_FORCED_OFF = True
-        scalar = pipeline.encode_bucket(pdf.copy(), const_layer="pages")
-    finally:
-        mvt._VECTORIZE_POINT_BLOCK = prev
-        mvt._VECTOR_EMIT_FORCED_OFF = prev_off
-    assert bytes(hybrid["layer_bytes"].iloc[0]) == \
-        bytes(scalar["layer_bytes"].iloc[0])
-    assert int(hybrid["n_features"].iloc[0]) == \
-        int(scalar["n_features"].iloc[0])
+    out = pipeline.encode_bucket(pdf.copy(), const_layer="pages")
+    feats = pipeline._vectorized_points(
+        pdf, lon, lat, tuple(float(v) for v in grid.tile_extent_3857(0, 0, 0)),
+        grid.buffered_pixel_bounds(), np.full(n, True))
+    want = mvt.encode_tile([mvt.encode_layer("pages", feats)])
+    assert bytes(out["layer_bytes"].iloc[0]) == want
+    assert int(out["n_features"].iloc[0]) == len(feats)

@@ -242,12 +242,12 @@ def q_mvt_layer_metrics(spark, sf_dir):
 
 
 def q_mvt_tiles_hier(spark, sf_dir):
-    """Single-shuffle hierarchical build (anchor_z=1 exercises the deep
-    path at these zooms) — tiles are byte-identical to q_mvt_tiles, so
-    the two entries' md5 columns must agree row-for-row."""
+    """Single-shuffle anchor plan (anchor_z=1 exercises the deep path
+    at these zooms) — tiles are byte-identical to q_mvt_tiles, so the
+    two entries' md5 columns must agree row-for-row."""
     from tegola_spark.plans import pipeline
 
-    _, tiles = pipeline.build_tiles_hierarchical(
+    _, tiles = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1, 2], anchor_z=1)
     return tiles.select(
         "z", "x", "y", "n_layers", "n_features", "tile_len",
@@ -257,8 +257,8 @@ def q_mvt_tiles_hier(spark, sf_dir):
 def q_mvt_point_counts(spark, sf_dir):
     """The FLAGSHIP tile pipeline under the HARD oracle (round-4
     VERDICT item 1): per-(z, x, y) kept/dropped feature counts of the
-    pages point layer from the REAL distributed build — hierarchical
-    anchor path (fused in-kernel assembly, deep span 3 levels) for
+    pages point layer from the REAL distributed build — the anchor
+    plan (fused in-kernel assembly, deep span 3 levels) for
     z >= 2, standard per-zoom fan-out below. DuckDB recomputes every
     count from first principles: spherical world-coord fan-out with the
     3x3 buffered-duplication predicate (tile.go buffered extents),
@@ -269,7 +269,7 @@ def q_mvt_point_counts(spark, sf_dir):
     (tile.go:104-107). Semantics anchored to atlas/map_test.go:210-455."""
     from tegola_spark.plans import pipeline
 
-    metrics, _ = pipeline.build_tiles_hierarchical(
+    metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1, 2, 3, 4, 5], anchor_z=2)
     return metrics.where(F.col("layer") == "pages").select(
         "z", "x", "y", "n_features", "n_dropped")
@@ -297,7 +297,7 @@ def q_mvt_line_counts(spark, sf_dir):
 def q_mvt_polygon_counts(spark, sf_dir):
     """Polygon family (G3 make-valid + clip) under the HARD oracle:
     per-(z, x, y, layer) kept/dropped counts of the nations/regions
-    rect layers from the REAL hierarchical build — the fused anchor
+    rect layers from the REAL anchor-plan build — the fused anchor
     kernel derives deep-tile polygon membership from the broadcast
     layer frame (pipeline._encode_anchor_bucket) and every candidate runs
     reproject -> prepare (quantize/dedup/de-close/rectify,
@@ -314,7 +314,7 @@ def q_mvt_polygon_counts(spark, sf_dir):
     (tests/test_polygon_counts_oracle.py)."""
     from tegola_spark.plans import pipeline
 
-    metrics, _ = pipeline.build_tiles_hierarchical(
+    metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[0, 1, 2, 3, 4, 5], anchor_z=2)
     return metrics.where(F.col("layer").isin("nations", "regions")).select(
         "z", "x", "y", "layer", "n_features", "n_dropped")

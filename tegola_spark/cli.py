@@ -7,7 +7,7 @@ the same job as one spark-submit invocation:
 
     spark-submit --py-files tegola_spark.zip -m tegola_spark.cli \\
         seed --input /data/corpus --out /sinks/tiles \\
-        --min-zoom 0 --max-zoom 10 [--hierarchical] [--cpus N]
+        --min-zoom 0 --max-zoom 10 [--anchor-z N] [--cpus N]
 
 or locally:  python -m tegola_spark.cli seed --input ... --out ...
 
@@ -18,8 +18,8 @@ Semantics carried over from the reference CLI:
   * --overwrite re-seeds from scratch (the `purge` + seed flow)
   * per-(z,x,y,layer) lineage metrics land in the sink's _metrics table
 
-Scale knobs: --hierarchical (single anchor shuffle for deep zooms),
---max-features (per-tile-layer budget; default 'auto'), --anchor-z.
+Scale knobs: --max-features (per-tile-layer budget; default 'auto'),
+--anchor-z (see pipeline.build_tiles). --hierarchical has no effect.
 """
 
 from __future__ import annotations
@@ -44,7 +44,8 @@ def build_parser() -> argparse.ArgumentParser:
     seed.add_argument("--batch-zooms", type=int, default=2,
                       help="zoom levels per write batch (resume granularity)")
     seed.add_argument("--hierarchical", action="store_true",
-                      help="single-anchor-shuffle deep-zoom build")
+                      help="no effect: the build picks the anchor plan "
+                           "from its inputs")
     seed.add_argument("--anchor-z", type=int, default=None)
     seed.add_argument("--max-features", default="auto",
                       help="'auto', an int budget, or 'none'")
@@ -63,9 +64,8 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def cmd_seed(args, spark=None) -> int:
-    from .plans import pipeline
     from .plans.session import get_spark
-    from .sources import sinks
+    from .streaming import checkpoint
 
     if args.overwrite:
         shutil.rmtree(args.out, ignore_errors=True)
@@ -91,30 +91,10 @@ def cmd_seed(args, spark=None) -> int:
             spark, args.tile_list, zooms,
             explicit=args.tile_list_explicit).cache()
 
-    recs = []
-    for i in range(0, len(zooms), args.batch_zooms):
-        batch = zooms[i:i + args.batch_zooms]
-        # tile-list mode pins the standard build: the hierarchical
-        # anchor kernel derives every descendant, which wastes work
-        # when only a listed subset is wanted
-        build = (pipeline.build_tiles_hierarchical
-                 if args.hierarchical and tile_filter is None
-                 else pipeline.build_tiles)
-        kwargs = {"max_features_per_tile": cap}
-        if tile_filter is not None:
-            kwargs["tile_filter"] = tile_filter
-        if build is pipeline.build_tiles_hierarchical \
-                and args.anchor_z is not None:
-            kwargs["anchor_z"] = args.anchor_z
-        metrics, tiles = build(spark, args.input, zooms=batch, **kwargs)
-        from pyspark.sql import functions as F
-        done = sinks.existing_keys(spark, args.out)
-        if done is not None:
-            tiles = tiles.join(F.broadcast(done), ["z", "x", "y"], "left_anti")
-            metrics = metrics.join(F.broadcast(done), ["z", "x", "y"], "left_anti")
-        if tiles.isEmpty():
-            continue
-        recs.append(sinks.write_tiles(tiles, metrics, args.out))
+    recs = checkpoint.seed_tiles(
+        spark, args.input, args.out, zooms, batch_zooms=args.batch_zooms,
+        max_features_per_tile=cap, tile_filter=tile_filter,
+        anchor_z=args.anchor_z)
     print(json.dumps({"batches_written": len(recs), "records": recs}))
     if own_session:
         spark.stop()

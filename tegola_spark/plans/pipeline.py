@@ -580,7 +580,7 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
                 n_docs: int | None = None,
                 point_zooms=None,
                 tile_filter: DataFrame | None = None,
-                points_df: DataFrame | None = None
+                anchor_z: int | None = None
                 ) -> tuple[DataFrame, DataFrame]:
     """Returns (layer_metrics_df, tiles_df).
 
@@ -592,15 +592,62 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     capping entirely. Drops are deterministic (rank by feature_id) and
     metered in the metrics' ``n_dropped`` lineage column.
 
-    ``point_zooms``: zooms the POINT layer fans out to (default: same
-    as ``zooms``); build_tiles_hierarchical passes the low zooms here
-    and derives the deep zooms from one anchor shuffle.
+    ``point_zooms``: the zooms, out of ``zooms``, the POINT layer fans
+    out to (default: all of them; ``[]`` builds no point layer).
 
     ``tile_filter``: optional DataFrame of (z, x, y) keys — only those
     tiles are built (semi-join on the fanned-out features BEFORE the
     cap window and the encode shuffle, so encode work is proportional
     to the filtered tile set). Used by streaming incremental
     maintenance (streaming/live.py) to rebuild only affected tiles.
+
+    The inputs choose the plan, with byte-identical tiles and lineage
+    either way (differentially tested). When the point layer has zooms
+    >= ``anchor_z`` and the build has no ``tile_filter`` (the anchor
+    kernel derives every descendant, wasted work for a listed subset),
+    roads, debug layers or default tags (families and a tag merge the
+    anchor kernel does not carry), points shuffle ONCE on their
+    ``anchor_z`` tile and every deeper zoom is derived inside the anchor
+    group (_build_anchored); every other build fans points out once per
+    zoom (_encode_streams). ``anchor_z`` trades shuffle volume against
+    anchor-group memory: group rows ~= corpus / 4^anchor_z. Default
+    max(4, max(zooms) - 6); at 10^12 docs use 10-12.
+    """
+    pzooms = list(zooms) if point_zooms is None else list(point_zooms)
+    if anchor_z is None:
+        anchor_z = max(4, max(zooms) - 6)
+    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    rule = _cap_rule(max_features_per_tile)
+    caps = {z: rule(z) for z in {*zooms, *pzooms}} if rule else None
+    # one corpus count per build sizes the point bucket fans and decides
+    # the exact cap-skip; callers that know it pass n_docs instead
+    if pzooms and n_docs is None:
+        n_docs = (docs.count() if docs is not None
+                  else corpus.documents(spark, sf_dir).count())
+    pts = point_features(spark, sf_dir, docs=docs) if pzooms else None
+    if any(z >= anchor_z for z in pzooms) and tile_filter is None \
+            and not (with_roads or with_debug or default_tags):
+        return _build_anchored(spark, sf_dir, sorted(zooms), pzooms,
+                               anchor_z, pts, with_polygons, caps, n_docs,
+                               sp, simplify, repair_polygons)
+    metrics = _encode_streams(
+        spark, sf_dir, zooms, pzooms, pts, caps, n_docs, sp, simplify,
+        repair_polygons, with_polygons=with_polygons, with_roads=with_roads,
+        with_debug=with_debug, default_tags=default_tags,
+        tile_filter=tile_filter)
+    return metrics, assemble_tiles(metrics)
+
+
+def _encode_streams(spark: SparkSession, sf_dir: str, zooms, pzooms,
+                    pts: DataFrame | None, caps: dict | None,
+                    n_pts: int | None, sp: int, simplify: bool,
+                    repair: bool, with_polygons: bool = True,
+                    with_roads: bool = False, with_debug: bool = False,
+                    default_tags: dict | None = None,
+                    tile_filter: DataFrame | None = None) -> DataFrame:
+    """The per-zoom plan's layer metrics: points (``pts``, fanned out to
+    ``pzooms``) and every other family (at ``zooms``) encoded per
+    (z, x, y, layer).
 
     Execution is per-STREAM (round-4): each feature family (corpus
     points / polygon layers / debug) shuffles separately with only its
@@ -610,21 +657,13 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
     union happens on the tiny metric side, and per-group encode bytes
     are unchanged.
     """
-    pzooms = list(zooms) if point_zooms is None else list(point_zooms)
     streams: list[tuple[DataFrame, str | None]] = []  # (feats, const_layer)
     if pzooms:
-        # ``points_df``: the hierarchical build passes its own geocoded
-        # point frame (post-reuse-exchange) so BOTH its consumers share
-        # one geocode evaluation — see build_tiles_hierarchical
-        pts = tiling.assign_point_tiles(
-            point_features(spark, sf_dir, docs=docs)
-            if points_df is None else points_df, pzooms)
+        pts = tiling.assign_point_tiles(pts, pzooms)
         streams.append((pts.select(*POINT_STREAM_COLS), "pages"))
-    cat = None
-    if with_polygons or with_roads:
-        # zoom pruning from the layer catalog (P4) — regions capped at z<=6
-        # static config — driver-side read, no per-build collect job
-        cat = layers.layer_zoom_ranges()
+    # zoom pruning from the layer catalog (P4) — regions capped at z<=6
+    # static config read in-process — no per-build collect job
+    cat = layers.layer_zoom_ranges()
     if with_polygons:
         polys = tiling.assign_bbox_tiles(polygon_features(spark, sf_dir), zooms)
         cond = None
@@ -652,32 +691,14 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
         raise ValueError("build_tiles: nothing to build "
                          "(no point zooms, polygons or debug layers)")
 
-    if tile_filter is not None:
-        filter_keys = tile_filter.select(
-            F.col("z").cast("int"), F.col("x").cast("long"),
-            F.col("y").cast("long")).distinct()
-    else:
-        filter_keys = None
+    filter_keys = None if tile_filter is None else tile_filter.select(
+        F.col("z").cast("int"), F.col("x").cast("long"),
+        F.col("y").cast("long")).distinct()
 
-    if max_features_per_tile == "auto":
-        cap = F.when(F.col("z") <= 4, F.lit(CAP_LOW_ZOOM)) \
-               .otherwise(F.lit(CAP_HIGH_ZOOM))
-    elif max_features_per_tile:
-        cap = F.lit(int(max_features_per_tile))
-    else:
-        cap = None
-
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    rule = _cap_rule(max_features_per_tile)
-    # one corpus count per build sizes the point stream's bucket fan and
-    # decides the exact cap-skip below; callers that already know it
-    # pass ``n_docs`` and no count job runs
-    n_pts = n_docs
-    if pzooms and n_pts is None:
-        n_pts = (docs.count() if docs is not None
-                 else corpus.documents(spark, sf_dir).count())
-
+    cap = None  # ``caps`` as one column over z (every zoom is a key)
+    for z, v in sorted((caps or {}).items()):
+        hit = F.col("z") == z
+        cap = F.when(hit, v) if cap is None else cap.when(hit, v)
     metrics = None
     for feats, const_layer in streams:
         group_keys = ["z", "x", "y"] + ([] if const_layer else ["layer"])
@@ -705,8 +726,8 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
         # are pure cost. Exact, not heuristic: the moment the corpus
         # outgrows the budget the window returns.
         cap_cannot_bind = (
-            const_layer is not None and rule is not None
-            and n_pts <= min(rule(z) for z in pzooms))
+            const_layer is not None and cap is not None
+            and n_pts <= min(caps[z] for z in pzooms))
         if cap is not None and not cap_cannot_bind:
             # rank + group count share one window spec (single sort);
             # cap-dropped rows never reach the encode shuffle, but their
@@ -725,7 +746,7 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
             # two-arg functions, so the constant must bind via a factory
             def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
                 return encode_bucket(pdf, simplify=simplify,
-                                     repair=repair_polygons, const_layer=cl)
+                                     repair=repair, const_layer=cl)
             return _encode
 
         _encode = _make_encode(const_layer)
@@ -743,7 +764,7 @@ def build_tiles(spark: SparkSession, sf_dir: str, zooms,
             .applyInPandas(_encode, ENCODE_SCHEMA)
         )
         metrics = m if metrics is None else metrics.unionByName(m)
-    return metrics, assemble_tiles(metrics)
+    return metrics
 
 
 # fused anchor-kernel output: metric rows (layer set) + assembled tile
@@ -970,39 +991,17 @@ def _encode_anchor_bucket(pdf: pd.DataFrame, anchor_z: int, zooms_hi,
     return pd.DataFrame(rows, columns=_FUSED_COLS)
 
 
-def build_tiles_hierarchical(spark: SparkSession, sf_dir: str, zooms,
-                             anchor_z: int | None = None,
-                             docs=None, with_polygons: bool = True,
-                             simplify: bool = False,
-                             repair_polygons: bool = True,
-                             max_features_per_tile="auto",
-                             n_docs: int | None = None
-                             ) -> tuple[DataFrame, DataFrame]:
-    """Single-shuffle tile build for deep zooms: the standard
-    build_tiles fans the POINT corpus out once per zoom (|zooms| full
-    corpus shuffles — the bottleneck at 100 TB); here points shuffle
-    ONCE on their ``anchor_z`` tile (plus ~30% buffered duplication) and
-    every deeper zoom's membership + encode happens inside the anchor
-    group. Low zooms (< anchor_z, bounded by the feature caps) and the
-    small polygon layers keep the standard path; outputs are
-    byte-identical to build_tiles (differentially tested).
-
-    ``anchor_z`` trades shuffle volume against anchor-group memory:
-    group rows ~= corpus / 4^anchor_z. Default max(4, max(zooms) - 6);
-    at 10^12 docs use 10-12.
-    """
-    zooms = sorted(zooms)
-    if anchor_z is None:
-        anchor_z = max(4, max(zooms) - 6)
-    zooms_hi = [z for z in zooms if z >= anchor_z]
-    zooms_lo = [z for z in zooms if z < anchor_z]
-    if not zooms_hi:
-        return build_tiles(spark, sf_dir, zooms, docs=docs,
-                           with_polygons=with_polygons, simplify=simplify,
-                           repair_polygons=repair_polygons,
-                           max_features_per_tile=max_features_per_tile,
-                           n_docs=n_docs)
-
+def _build_anchored(spark: SparkSession, sf_dir: str, zooms, pzooms,
+                    anchor_z: int, pts: DataFrame, with_polygons: bool,
+                    caps: dict | None, n_docs: int, sp: int,
+                    simplify: bool, repair: bool
+                    ) -> tuple[DataFrame, DataFrame]:
+    """build_tiles' anchor plan: the point zooms >= ``anchor_z`` come
+    from ONE point shuffle on the anchor tile (_encode_anchor_bucket,
+    with the same per-zoom ``caps``); the lower point zooms and the
+    small polygon layers keep the per-zoom stream code
+    (_encode_streams)."""
+    zooms_hi = sorted(z for z in pzooms if z >= anchor_z)
     # Fused in-kernel assembly pays a fixed python cost (polygon
     # membership + per-tile assembly) that is repaid only when the
     # descendant fan-out is deep enough for the assemble exchange to
@@ -1025,23 +1024,14 @@ def build_tiles_hierarchical(spark: SparkSession, sf_dir: str, zooms,
         if n_polys > FUSED_MAX_POLYS:
             fused = False
 
-    # One corpus count per build sizes the anchor bucket fan here and
-    # the low-zoom build's bucket fan and exact cap-skip (build_tiles);
-    # callers that already know it pass n_docs and no count job runs.
-    if n_docs is None:
-        n_docs = (docs.count() if docs is not None
-                  else corpus.documents(spark, sf_dir).count())
-    # Geocode-once materialization (round-6, guide §8 "move small rows
-    # once"): the hierarchical build consumes the geocoded points from
-    # two plan branches (anchor fan-out, low-zoom stream) and each
-    # branch would re-execute the subtree — profiled as the
-    # render+geocode python stage running 2-3 times per run.
-    # localCheckpoint (eager) materializes the THIN geocoded projection
-    # (~40-70 B/row) exactly once; every branch reads the blocks — no
-    # extra exchange, no recompute. Executor loss on a real cluster
-    # fails the build and retries it (same documented caveat as the
-    # iterative graph operators).
-    pts = point_features(spark, sf_dir, docs=docs).localCheckpoint()
+    # Geocode-once (round-6): the anchor fan-out and the low-zoom
+    # stream both read the geocoded points, and each branch would re-run
+    # the render+geocode python stage (profiled: 2-3 times per run). An
+    # eager localCheckpoint materializes the THIN projection (~40-70
+    # B/row) once for both, with no extra exchange. Executor loss on a
+    # real cluster fails the build and retries it (the same caveat as
+    # the iterative graph operators).
+    pts = pts.localCheckpoint()
     # ONE anchor shuffle for all deep point zooms, carrying only the
     # point stream's live columns (z is the constant anchor level, so
     # it does not ship either); column -> type of its NULL in skeleton rows
@@ -1065,60 +1055,48 @@ def build_tiles_hierarchical(spark: SparkSession, sf_dir: str, zooms,
                 .select("x", "y").distinct().select("x", "y", *nulls))
         anchored = anchored.unionByName(skel)
 
-    # standard path: with fusion it covers the low zooms COMPLETELY
-    # (points + polygons + assemble) and every deep zoom runs in the
-    # anchor kernel; without fusion it additionally carries the polygon
-    # layers at ALL zooms (the anchor kernel is then points-only and
-    # tiles assemble via the grouped concat).
-    std_metrics = std_tiles = None
-    if zooms_lo or (with_polygons and not fused):
-        std_zooms = zooms_lo if fused else zooms
-        std_metrics, std_tiles = build_tiles(
-            spark, sf_dir, std_zooms, docs=docs,
-            with_polygons=with_polygons,
-            simplify=simplify, repair_polygons=repair_polygons,
-            max_features_per_tile=max_features_per_tile,
-            n_docs=n_docs, point_zooms=zooms_lo, points_df=pts)
+    # per-zoom streams: with fusion they cover every other zoom
+    # COMPLETELY (points + polygons + assemble) and every deep zoom runs
+    # in the anchor kernel; without fusion they additionally carry the
+    # polygon layers at ALL zooms (the anchor kernel is then points-only
+    # and tiles assemble via the grouped concat).
+    pzooms_lo = [z for z in pzooms if z < anchor_z]
+    std_zooms = [z for z in zooms if z not in zooms_hi] if fused else zooms
+    std_metrics = None
+    if pzooms_lo or (with_polygons and std_zooms):
+        std_metrics = _encode_streams(
+            spark, sf_dir, std_zooms, pzooms_lo, pts, caps, n_docs, sp,
+            simplify, repair, with_polygons=with_polygons)
 
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # anchor groups carry the whole corpus once (plus ~10% buffer dup)
     n_buckets = _encode_buckets(sp, n_docs)
 
-    # same per-(tile, layer) budget policy as the standard path, applied
-    # inside the anchor kernel (drops ride _cap_dropped into n_dropped)
-    rule = _cap_rule(max_features_per_tile)
-    caps = {z: rule(z) for z in zooms_hi} if rule else None
-
-    def _make_encode(emit_tiles):
-        bc = polys_bc  # the handle rides the closure; data is on executors
-
-        def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _encode_anchor_bucket(
-                pdf, anchor_z, zooms_hi, simplify, repair_polygons,
-                caps=caps, polys=None if bc is None else bc.value,
-                layer_zoom=layer_zoom, emit_tiles=emit_tiles)
-        return _encode
+    def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        # the broadcast handle rides the closure; data is on executors
+        return _encode_anchor_bucket(
+            pdf, anchor_z, zooms_hi, simplify, repair, caps=caps,
+            polys=None if polys_bc is None else polys_bc.value,
+            layer_zoom=layer_zoom, emit_tiles=fused)
 
     # explicit repartition before the grouped-map: AQE-coalescing-exempt
-    # (see build_tiles) so the anchor encode keeps its parallelism
-    bucketed = anchored.withColumn(
+    # (see _encode_streams) so the anchor encode keeps its parallelism
+    out = anchored.withColumn(
         "_bucket", F.pmod(F.hash("x", "y"), F.lit(n_buckets))) \
         .repartition(n_buckets, "_bucket") \
-        .groupBy("_bucket")
+        .groupBy("_bucket") \
+        .applyInPandas(_encode, FUSED_SCHEMA if fused else ENCODE_SCHEMA)
     if not fused:
-        hier_metrics = bucketed.applyInPandas(
-            _make_encode(False), ENCODE_SCHEMA)
-        metrics = hier_metrics if std_metrics is None \
-            else std_metrics.unionByName(hier_metrics)
+        metrics = out if std_metrics is None else std_metrics.unionByName(out)
         return metrics, assemble_tiles(metrics)
 
-    out = bucketed.applyInPandas(_make_encode(True), FUSED_SCHEMA)
-    hier_metrics = out.where(F.col("layer").isNotNull()) \
-        .select(*_METRIC_COLS)
-    hier_tiles = out.where(F.col("layer").isNull()).select(
+    metrics = out.where(F.col("layer").isNotNull()).select(*_METRIC_COLS)
+    tiles = out.where(F.col("layer").isNull()).select(
         "z", "x", "y", "tile_bytes", "n_features", "n_layers", "tile_len")
-    metrics = hier_metrics if std_metrics is None \
-        else std_metrics.unionByName(hier_metrics)
-    tiles = hier_tiles if std_tiles is None \
-        else std_tiles.unionByName(hier_tiles)
-    return metrics, tiles
+    if std_metrics is None:
+        return metrics, tiles
+    return (std_metrics.unionByName(metrics),
+            assemble_tiles(std_metrics).unionByName(tiles))
+
+
+# the name the frozen benchmark harnesses (bench.py, perfbench) call
+build_tiles_hierarchical = build_tiles

@@ -26,6 +26,7 @@ is the stand-in for the geocoder the north star requires.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -57,21 +58,17 @@ def spread_scan(df: DataFrame, key_col: str) -> DataFrame:
     row key (deterministic under retries — guide §2.5 warns off
     round-robin/rand keys) so downstream per-row work parallelizes.
     Conditional by construction: a real multi-file corpus at scale
-    already scans wider than the core count, making this a no-op;
-    SPARK_GRAFT_SCAN_SPREAD=0 forces it off."""
-    if os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "1") != "1":
-        return df
+    already scans wider than the core count, making this a no-op. The
+    size test reads local files only: a scan with any input that is not
+    a ``file:`` URI (HDFS, object stores) stays unspread, and a local
+    input that cannot be read raises."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_splits = df.rdd.getNumPartitions()
-        if n_splits * 2 >= par:
-            return df
-        n_bytes = 0
-        for f in df.inputFiles():
-            p = f[len("file:"):] if f.startswith("file:") else f
-            n_bytes += os.path.getsize(p)
-    except Exception:
+    if df.rdd.getNumPartitions() * 2 >= par:
         return df
+    files = df.inputFiles()
+    if not all(f.startswith("file:") for f in files):
+        return df
+    n_bytes = sum(os.path.getsize(unquote(urlparse(f).path)) for f in files)
     if n_bytes < _SPREAD_MIN_BYTES:
         return df
     return df.repartition(par, F.col(key_col))

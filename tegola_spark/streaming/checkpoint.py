@@ -21,14 +21,20 @@ from ..sources import sinks
 
 
 def seed_tiles(spark: SparkSession, sf_dir: str, out_path: str, zooms,
-               batch_zooms: int = 2, docs=None) -> list[dict]:
+               batch_zooms: int = 2, docs=None,
+               max_features_per_tile="auto", tile_filter=None,
+               anchor_z: int | None = None) -> list[dict]:
     """Seed all zooms into the sink in zoom batches, skipping batches
-    whose tiles already exist (resume). Returns manifest records."""
+    whose tiles already exist (resume). Returns manifest records. The
+    remaining arguments pass through to pipeline.build_tiles."""
     recs = []
     zooms = sorted(zooms)
     for i in range(0, len(zooms), batch_zooms):
         batch = zooms[i:i + batch_zooms]
-        metrics, tiles = pipeline.build_tiles(spark, sf_dir, zooms=batch, docs=docs)
+        metrics, tiles = pipeline.build_tiles(
+            spark, sf_dir, zooms=batch, docs=docs,
+            max_features_per_tile=max_features_per_tile,
+            tile_filter=tile_filter, anchor_z=anchor_z)
         done = sinks.existing_keys(spark, out_path)
         if done is not None:
             tiles = tiles.join(F.broadcast(done), ["z", "x", "y"], "left_anti")

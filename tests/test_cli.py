@@ -20,6 +20,17 @@ def test_cli_seed_and_resume(spark, sf_dir, tmp_path, capsys):
     # tiles decode and carry the expected layers
     row = spark.read.parquet(os.path.join(out, "tiles")).where("z = 0").first()
     assert "pages" in mvt.decode_tile(bytes(row["tile_bytes"]))
+    # --hierarchical has no effect: the build picks its plan from the
+    # inputs, so the same seed without it writes the same tiles
+    out2 = str(tmp_path / "sink2")
+    assert cli.main(["seed", "--input", sf_dir, "--out", out2,
+                     "--min-zoom", "0", "--max-zoom", "2",
+                     "--anchor-z", "1"], spark=spark) == 0
+    capsys.readouterr()
+    a, b = (sorted(spark.read.parquet(os.path.join(o, "tiles"))
+                   .select("z", "x", "y", "tile_bytes").collect())
+            for o in (out, out2))
+    assert a == b
     # resume is a no-op
     rc = cli.main(["seed", "--input", sf_dir, "--out", out,
                    "--min-zoom", "0", "--max-zoom", "2"], spark=spark)

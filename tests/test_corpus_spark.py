@@ -95,3 +95,20 @@ def test_geocoded_points_equals_geocoded_pages(pages_df, spark, sf_dir):
     want = sorted(tuple(r) for r in split.select(*cols).collect())
     assert len(got) > 0
     assert got == want
+
+
+def test_spread_scan_input_file_rule(spark, sf_dir, monkeypatch):
+    """spread_scan sizes local inputs only: a scan over a non-``file:``
+    input stays unspread, and a local input it cannot read raises
+    instead of silently skipping the spread."""
+    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # narrow enough that the input size decides
+    assert df.rdd.getNumPartitions() * 2 < spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(type(df), "inputFiles",
+                        lambda self: ["hdfs://nn/corpus/documents.parquet"])
+    out = corpus.spread_scan(df, "doc_id")
+    assert out is df  # the same plan: no Exchange added
+    monkeypatch.setattr(type(df), "inputFiles",
+                        lambda self: ["file:/nonexistent/documents.parquet"])
+    with pytest.raises(FileNotFoundError):
+        corpus.spread_scan(df, "doc_id")

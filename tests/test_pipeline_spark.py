@@ -196,32 +196,34 @@ def _tiles_and_lineage(built) -> tuple[dict, dict]:
         metrics.unpersist()
 
 
-def _fused_anchor(tiles) -> bool:
-    """Whether the plan's anchor kernel assembles tiles in place (its
-    grouped-map output carries tile_len)."""
+def _kernels(tiles, mark: str = "") -> int:
+    """Grouped-map (encode kernel) nodes in the plan whose line carries
+    ``mark``; the fused anchor kernel's output carries tile_len."""
     plan = tiles._jdf.queryExecution().executedPlan().toString()
-    return any("FlatMapGroupsInPandas" in line and "tile_len" in line
+    return sum("FlatMapGroupsInPandas" in line and mark in line
                for line in plan.splitlines())
 
 
 def test_hierarchical_build_byte_identical(spark, sf_dir):
-    """build_tiles_hierarchical (one anchor shuffle for deep point
-    zooms) must produce byte-identical tiles and per-(tile, layer)
-    lineage to the per-zoom fan-out — under both anchor kernels (the
-    default anchor 4 is 1 level below z5, so unfused; anchor 2 is 3
-    levels below, so fused in-kernel assembly) and both with the
-    default budgets and a tiny cap that forces drops everywhere."""
+    """The anchor plan (one anchor shuffle for deep point zooms) must
+    produce byte-identical tiles and per-(tile, layer) lineage to the
+    per-zoom fan-out (anchor above every zoom) — under both anchor
+    kernels (the default anchor 4 is 1 level below z5, so unfused;
+    anchor 2 is 3 levels below, so fused in-kernel assembly) and both
+    with the default budgets and a tiny cap that forces drops."""
     zooms = [0, 1, 2, 3, 4, 5]
     for cap in ("auto", 7):
         a, da = _tiles_and_lineage(pipeline.build_tiles(
-            spark, sf_dir, zooms=zooms, max_features_per_tile=cap))
+            spark, sf_dir, zooms=zooms, max_features_per_tile=cap,
+            anchor_z=max(zooms) + 1))
         for anchor_z in (None, 2):
-            hier = pipeline.build_tiles_hierarchical(
+            hier = pipeline.build_tiles(
                 spark, sf_dir, zooms=zooms, anchor_z=anchor_z,
                 max_features_per_tile=cap)
             b, db = _tiles_and_lineage(hier)
             what = f"cap={cap} anchor_z={anchor_z}"
-            assert _fused_anchor(hier[1]) == (anchor_z == 2), what
+            fused = bool(_kernels(hier[1], "tile_len"))
+            assert fused == (anchor_z == 2), what
             assert set(a) == set(b), what
             diff = [k for k in a if a[k] != b[k]]
             assert diff == [], \
@@ -233,7 +235,7 @@ def test_hierarchical_cap_enforced(spark, sf_dir):
     """The anchor kernel applies the same per-(tile, layer) budget as
     the standard path's window cap, with metered drops."""
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    metrics, _ = pipeline.build_tiles_hierarchical(
+    metrics, _ = pipeline.build_tiles(
         spark, sf_dir, zooms=[4], anchor_z=4, with_polygons=False,
         max_features_per_tile=2)
     rows = metrics.where("layer = 'pages'").collect()
@@ -248,13 +250,10 @@ def test_hierarchical_deep_only_zooms_byte_identical(spark, sf_dir):
     """zooms entirely above anchor_z (no low-zoom standard path for
     points; polygons still standard): still byte-identical."""
     zooms = [6, 7]
-    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms)
-    _, hier = pipeline.build_tiles_hierarchical(spark, sf_dir, zooms=zooms,
-                                                anchor_z=4)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in std.collect()}
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in hier.collect()}
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
+    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
+                                  anchor_z=max(zooms) + 1)
+    _, hier = pipeline.build_tiles(spark, sf_dir, zooms=zooms, anchor_z=4)
+    assert _tile_bytes(hier) == _tile_bytes(std)
 
 
 def test_fused_guard_falls_back(spark, sf_dir, monkeypatch):
@@ -265,16 +264,14 @@ def test_fused_guard_falls_back(spark, sf_dir, monkeypatch):
     tiles."""
     zooms = [0, 1, 2, 3, 4]
     monkeypatch.setattr(pipeline, "FUSED_MAX_POLYS", 3)
-    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms)
+    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms,
+                                  anchor_z=max(zooms) + 1)
     # anchor_z=1 makes the deep span 3 levels -> auto decision WANTS
     # fused; the guard must veto it
-    _, hier = pipeline.build_tiles_hierarchical(
+    _, hier = pipeline.build_tiles(
         spark, sf_dir, zooms=zooms, anchor_z=1)
-    assert not _fused_anchor(hier)
-    a = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in std.collect()}
-    b = {(r["z"], r["x"], r["y"]): bytes(r["tile_bytes"]) for r in hier.collect()}
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
+    assert not _kernels(hier, "tile_len")
+    assert _tile_bytes(hier) == _tile_bytes(std)
 
 
 def test_fused_low_polygon_only_tiles(spark, sf_dir):
@@ -285,13 +282,12 @@ def test_fused_low_polygon_only_tiles(spark, sf_dir):
     from tegola_spark.sources import corpus
     docs = corpus.documents(spark, sf_dir).where("doc_id < 5")
     zooms = [0, 1, 2, 3, 4, 5]
-    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms, docs=docs)
-    fm, hier = pipeline.build_tiles_hierarchical(
+    _, std = pipeline.build_tiles(spark, sf_dir, zooms=zooms, docs=docs,
+                                  anchor_z=max(zooms) + 1)
+    fm, hier = pipeline.build_tiles(
         spark, sf_dir, zooms=zooms, anchor_z=2, docs=docs)
-    assert _fused_anchor(hier)
-    a, b = _tile_bytes(std), _tile_bytes(hier)
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)
+    assert _kernels(hier, "tile_len")
+    assert _tile_bytes(hier) == _tile_bytes(std)
     # the skeleton path actually ran: some deep tile has polygon layers
     # but no pages layer
     by_tile = {}
@@ -299,6 +295,26 @@ def test_fused_low_polygon_only_tiles(spark, sf_dir):
         by_tile.setdefault((r["z"], r["x"], r["y"]), set()).add(r["layer"])
     assert any("pages" not in ls for ls in by_tile.values()), \
         "expected at least one polygon-only deep tile"
+
+
+def test_inputs_choose_anchor_plan(spark, sf_dir):
+    """build_tiles takes the anchor plan (its anchor kernel is one more
+    grouped-map than the per-zoom plan, an anchor above every zoom)
+    exactly when the point layer reaches anchor_z and the build carries
+    no tile_filter, roads, debug layers or default tags."""
+    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+
+    def kernels(**kw):
+        return _kernels(pipeline.build_tiles(
+            spark, sf_dir, zooms=[0, 1, 2, 3, 4, 5], n_docs=n_docs, **kw)[1])
+
+    per_zoom = {"anchor_z": 6}
+    assert kernels() == kernels(**per_zoom) + 1
+    keys = spark.createDataFrame([(0, 0, 0)], "z int, x long, y long")
+    for kw in ({"tile_filter": keys}, {"with_debug": True},
+               {"with_roads": True}, {"default_tags": {"v": 7}}):
+        assert kernels(**kw) == kernels(**kw, **per_zoom), kw
+    assert kernels(tile_filter=keys) == kernels() - 1
 
 
 def test_typed_tag_values_bytematch_hand_built_protobuf():

@@ -35,7 +35,7 @@ def test_spread_scan_preserves_rows(spark, sf_dir):
 
 
 def test_spread_scan_noop_below_threshold(spark):
-    # in-memory frame: inputFiles() fails -> conservative no-op
+    # in-memory frame: no input files to size -> no-op
     df = _docs(spark)
     out = corpus.spread_scan(df, "doc_id")
     assert out is df

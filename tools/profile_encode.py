@@ -50,7 +50,8 @@ def main():
         "x", "y", "feature_id", "lon", "lat", "tag_url", "tag_lang")
     apdf = anchored.toPandas()
     print(f"anchor rows: {len(apdf)}", file=sys.stderr)
-    caps = {4: pipeline.CAP_LOW_ZOOM, 5: pipeline.CAP_HIGH_ZOOM}
+    rule = pipeline._cap_rule("auto")
+    caps = {z: rule(z) for z in (4, 5)}
     t0 = time.perf_counter()
     out2 = pipeline._encode_anchor_bucket(
         apdf.copy(), 4, [4, 5], False, True, caps=caps, polys=None,
